@@ -217,25 +217,30 @@ object Bench {
       java.nio.file.Paths.get("/proc/loadavg"))).split(" ").head.toDouble
   } catch { case _: Throwable => -1.0 }
 
-  /** (wantedTicks, stealTicks) from /proc/stat, where wanted =
-    * user+nice+system+irq+softirq+steal — the cycles the guest tried
-    * to run, EXCLUDING idle/iowait. Guest loadavg is blind to
-    * HYPERVISOR contention: on a stolen-cpu host the same query
-    * measured 6.5 s and 71 s with guest loadavg < 1 both times (r5,
-    * SCALING.md). Steal over WANTED cycles is the honest ratio — on a
-    * 32-cpu guest where a query keeps 4 cpus busy, an all-cpu steal
-    * average of 9% is really ~45% of the cycles the job asked for. */
+  /** (totalTicks, stealTicks) from the `cpu` line of /proc/stat, where
+    * total counts every state, idle and iowait included. Guest loadavg
+    * is blind to HYPERVISOR contention: on a stolen-cpu host the same
+    * query measured 6.5 s and 71 s with guest loadavg < 1 both times
+    * (r5, SCALING.md), so steal is sampled directly. It is judged as a
+    * share of the guest's whole capacity, not of the cycles it wanted:
+    * on an idle guest those are almost all steal, so a 3 s, 4-cpu
+    * sample with 11 steal and 5 user+sys ticks read 69% of wanted
+    * cycles while it was ~1% of capacity. */
   def cpuTicks(): (Long, Long) = try {
-    val c = scala.io.Source.fromFile("/proc/stat").getLines()
-      .next().trim.split("\\s+").drop(1).map(_.toLong)
-    val steal = if (c.length > 7) c(7) else 0L
-    (c(0) + c(1) + c(2) + c(5) + c(6) + steal, steal)
+    cpuTicks(scala.io.Source.fromFile("/proc/stat").getLines().next())
   } catch { case _: Throwable => (0L, 0L) }
 
-  /** Stolen share (%) of wanted cpu cycles between two samples. */
+  /** [[cpuTicks]] of one `cpu` line of /proc/stat. Only the first 8
+    * states count: guest time is already inside user and nice. */
+  private[graft] def cpuTicks(cpuLine: String): (Long, Long) = {
+    val c = cpuLine.trim.split("\\s+").slice(1, 9).map(_.toLong)
+    (c.sum, if (c.length > 7) c(7) else 0L)
+  }
+
+  /** Stolen share (%) of total cpu capacity between two samples. */
   def stealPct(a: (Long, Long), b: (Long, Long)): Double = {
-    val dw = b._1 - a._1
-    if (dw <= 0) 0.0 else 100.0 * (b._2 - a._2) / dw
+    val dt = b._1 - a._1
+    if (dt <= 0) 0.0 else 100.0 * (b._2 - a._2) / dt
   }
 
   /** Seconds for a fixed 400M-step xorshift loop — a deterministic

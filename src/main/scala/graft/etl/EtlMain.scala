@@ -1,6 +1,9 @@
 package graft.etl
 
-import org.apache.spark.sql.SparkSession
+import scala.collection.mutable
+
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 /** CLI entry point: the reference's whole pipeline (ingest → clean →
   * star schema → sinks) over a set of scraper JSON-array files.
@@ -13,6 +16,10 @@ import org.apache.spark.sql.SparkSession
   * (per-instance keyword rows, sparse monotonic author ids).
   */
 object EtlMain {
+  /** The order the per-table counts are reported in. */
+  private val tableOrder = Seq("articles", "publishers", "keywords", "topics",
+    "dates", "authors", "author_article_mapping", "keywords_articles_mapping")
+
   def main(args: Array[String]): Unit = {
     val compat = args.contains("--compat")
     val rest = args.filterNot(_ == "--compat")
@@ -38,54 +45,66 @@ object EtlMain {
     val callerTz = spark.conf.getOption("spark.sql.session.timeZone")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     if (existing.isEmpty) spark.sparkContext.setLogLevel("WARN")
+    // every Dataset this run persists; released in `finally`, so a run
+    // that throws leaves nothing cached in a caller's session either
+    val cached = mutable.ArrayBuffer.empty[DataFrame]
+    def persist(df: DataFrame): DataFrame = { cached += df; df.persist() }
     try {
+      // Each table's plan is evaluated once. `clean` is materialized
+      // first (the ingest's row count rides that job as an
+      // Observation). The dims the fact and bridges broadcast are
+      // persisted up front, so those plans read the cached dims instead
+      // of re-running their two-phase rank. Every table's first action
+      // is its parallel INSERT write: it fills the table's cache and
+      // counts the rows on the way. The single-file CSV then reads the
+      // cache, so its coalesce(1) never collapses the table's own
+      // stages into one task. A fact or bridge table is released right
+      // after its two writes, so at most one of them is cached at a time.
+      val mergedRows = Observation()
+      val merged = Ingest.readMerged(spark, inputs)
+        .observe(mergedRows, count(lit(1)).as("rows"))
+      val clean = persist(Clean(merged))
+      val cleanRows = clean.count()
+      println(s"[etl] merged=${mergedRows.get("rows")} clean=$cleanRows")
 
-    val merged = Ingest.readMerged(spark, inputs)
-    // one materialization serves every downstream action: without the
-    // cache, each of the 8 tables' CSV write + INSERT write + count
-    // (plus the JSONL sink and the two audit counts) re-runs the full
-    // ingest window shuffle and cleaning chain — ~27 recomputations of
-    // the corpus scan for one pipeline run
-    val clean = Clean(merged).cache()
-    val star = StarSchema.build(clean)
-    // compat mode must stay referentially consistent: the bridges are
-    // rebuilt against the compat dims' ids (the reference's c43/c45
-    // name-only fanout joins), not the default dims' dense ids
-    // localCheckpoint pins the compat dims' monotonically_increasing
-    // ids: without it the dim-table write and the bridge join would
-    // re-evaluate the plan and could assign DIFFERENT ids
-    val keywordsDim =
-      if (compat) StarSchema.keywordsCompat(clean).localCheckpoint()
-      else star.keywords
-    val authorsDim =
-      if (compat) StarSchema.authorsCompat(clean).localCheckpoint()
-      else star.authors
-    val authorBridge =
-      if (compat) StarSchema.authorBridgeCompat(clean, authorsDim)
-      else star.authorArticle
-    val keywordBridge =
-      if (compat) StarSchema.keywordBridgeCompat(clean, keywordsDim)
-      else star.keywordArticle
+      val star = StarSchema.build(clean)
+      val topicsDim = persist(star.topics)
+      val datesDim = persist(star.dates)
+      // compat mode must stay referentially consistent: the bridges are
+      // rebuilt against the compat dims' ids (the reference's c43/c45
+      // name-only fanout joins), not the default dims' dense ids.
+      // localCheckpoint pins the compat dims' monotonically_increasing
+      // ids: without it the dim-table write and the bridge join would
+      // re-evaluate the plan and could assign DIFFERENT ids
+      val keywordsDim =
+        if (compat) StarSchema.keywordsCompat(clean).localCheckpoint()
+        else persist(star.keywords)
+      val authorsDim =
+        if (compat) StarSchema.authorsCompat(clean).localCheckpoint()
+        else persist(star.authors)
+      val authorBridge =
+        if (compat) StarSchema.authorBridgeCompat(clean, authorsDim)
+        else star.authorArticle
+      val keywordBridge =
+        if (compat) StarSchema.keywordBridgeCompat(clean, keywordsDim)
+        else star.keywordArticle
 
-    val tables = Seq(
-      "articles" -> star.articles,
-      "publishers" -> star.publishers,
-      "keywords" -> keywordsDim,
-      "topics" -> star.topics,
-      "dates" -> star.dates,
-      "authors" -> authorsDim,
-      "author_article_mapping" -> authorBridge,
-      "keywords_articles_mapping" -> keywordBridge)
-
-    println(s"[etl] merged=${merged.count()} clean=${clean.count()}")
-    tables.foreach { case (name, df) =>
-      Writers.writeCsv(df, s"$outDir/csv/$name", singleFile = true)
-      Writers.writeInsertScript(df, name, s"$outDir/sql/$name")
-      println(s"[etl] $name=${df.count()}")
-    }
-    Writers.writeJsonl(clean, s"$outDir/clean_jsonl")
-    clean.unpersist()
+      val counts = mutable.Map.empty[String, Long]
+      def write(name: String, df: DataFrame): Unit = {
+        counts(name) = Writers.writeInsertScriptCounted(df, name, s"$outDir/sql/$name")
+        Writers.writeCsv(df, s"$outDir/csv/$name", singleFile = true)
+      }
+      Seq("topics" -> topicsDim, "dates" -> datesDim,
+        "keywords" -> keywordsDim, "authors" -> authorsDim)
+        .foreach { case (name, df) => write(name, df) }
+      Seq("publishers" -> star.publishers, "articles" -> star.articles,
+        "author_article_mapping" -> authorBridge,
+        "keywords_articles_mapping" -> keywordBridge)
+        .foreach { case (name, df) => write(name, persist(df)); df.unpersist() }
+      tableOrder.foreach(name => println(s"[etl] $name=${counts(name)}"))
+      Writers.writeJsonl(clean, s"$outDir/clean_jsonl")
     } finally {
+      cached.foreach(_.unpersist())
       existing.foreach { _ =>
         callerTz match {
           case Some(tz) => spark.conf.set("spark.sql.session.timeZone", tz)

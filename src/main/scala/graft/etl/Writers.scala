@@ -3,7 +3,7 @@ package graft.etl
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -25,7 +25,10 @@ object Writers {
     * — Spark's default backslash escaping is not what pandas emits),
     * empty strings stay unquoted. CsvParitySpec pins this against
     * literal `DB/Tables/authors.csv` rows. `singleFile` coalesces for
-    * reference parity; leave false at scale. */
+    * reference parity; leave false at scale. The coalesce(1) has no
+    * shuffle, so it runs the input's whole last stage in one task
+    * unless the input is already materialized (persisted and filled):
+    * then that one task only reads the cache. */
   def writeCsv(df: DataFrame, path: String, singleFile: Boolean = false): Unit = {
     val d = if (singleFile) df.coalesce(1) else df
     d.write.mode("overwrite")
@@ -63,6 +66,16 @@ object Writers {
   /** K6: write the INSERT script as distributed text parts. */
   def writeInsertScript(df: DataFrame, table: String, path: String): Unit =
     insertStatements(df, table).write.mode("overwrite").text(path)
+
+  /** K6 that also returns the table's row count. The count is an
+    * `Observation` riding this write, not a job of its own; if `df` is
+    * persisted and not yet materialized, this parallel write is also
+    * the one that fills its cache. */
+  def writeInsertScriptCounted(df: DataFrame, table: String, path: String): Long = {
+    val rows = Observation()
+    writeInsertScript(df.observe(rows, count(lit(1)).as("rows")), table, path)
+    rows.get("rows").asInstanceOf[Long]
+  }
 
   /** K1/K2: the scraper's single-file JSON array (pretty-printed
     * records, comma-separated, wrapped in [ ]). Reference-parity

@@ -100,4 +100,16 @@ class BenchSpec extends AnyFunSuite {
     assert(!Bench.shouldRetry(valid = true, queryStealPct = 50.0, stealLimit = 5.0),
       "a settled median needs no retry regardless of steal")
   }
+
+  test("steal is a share of total cpu capacity, idle included") {
+    // a 3 s sample of an idle 4-cpu guest (100 ticks/s): 11 steal and 5
+    // user+sys ticks against 1,200 ticks of capacity is ~1%, not the
+    // 69% that steal over the cycles the guest wanted would read
+    val before = Bench.cpuTicks("cpu  1000 0 500 90000 10 0 0 100 0 0")
+    val after = Bench.cpuTicks("cpu  1003 0 502 91184 10 0 0 111 0 0")
+    assert(after._1 - before._1 === 1200L)
+    assert(math.abs(Bench.stealPct(before, after) - 11.0 / 1200 * 100) < 1e-9)
+    // guest and guest_nice are already inside user and nice
+    assert(Bench.cpuTicks("cpu  10 0 0 0 0 0 0 0 7 7") === ((10L, 0L)))
+  }
 }
