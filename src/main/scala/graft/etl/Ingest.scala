@@ -8,7 +8,8 @@ import org.apache.spark.sql.functions._
   * The reference stages scraper JSON through MongoDB and re-exports it
   * (DB/MongoDB.py:36-41, DB/ETL.ipynb c4); here the landing directory
   * of JSON-array files IS the source of record and the multi-source
-  * merge is a unionByName — no staging database, no driver round-trip.
+  * merge is one scan over all of them — no staging database, no driver
+  * round-trip.
   *
   * Every read uses the explicit permissive schema (Schemas.articleSchema)
   * — inference is never on the data path, which at 100 TB also saves a
@@ -16,13 +17,14 @@ import org.apache.spark.sql.functions._
   */
 object Ingest {
 
-  /** S1: one JSON-array file (the scraper's append format,
-    * ScienceDirect/ScienceDirect.py:457-488) or a directory of them. */
-  def readArticles(spark: SparkSession, path: String): DataFrame =
+  /** S1: JSON-array files (the scraper's append format,
+    * ScienceDirect/ScienceDirect.py:457-488) or directories of them,
+    * read as one scan. */
+  def readArticles(spark: SparkSession, paths: String*): DataFrame =
     spark.read
       .schema(Schemas.articleSchema)
       .option("multiLine", true)       // whole-file JSON arrays, not JSONL
-      .json(path)
+      .json(paths: _*)
 
   /** JSONL variant for engine-native round-trips. */
   def readArticlesJsonl(spark: SparkSession, path: String): DataFrame =
@@ -104,6 +106,16 @@ object Ingest {
     deduped.unionByName(withPublisher.filter(col("doi").isNull))
   }
 
-  def readMerged(spark: SparkSession, paths: Seq[String]): DataFrame =
-    normalize(paths.map(readArticles(spark, _)).reduce(_.unionByName(_)))
+  /** Ingest: every path (files, directories, or a mix) in ONE scan,
+    * then [[normalize]]. One scan plans one file-source leaf however
+    * many files the CLI names, where a per-file `unionByName` planned
+    * one branch per file (24 for the reference corpus). All files
+    * share the one explicit schema, so the rows are the same as that
+    * union's, duplicates included: a path named twice is listed, and
+    * read, twice, and normalize's doi dedup drops the copies of every
+    * row that has a doi, as it did for the union. */
+  def readMerged(spark: SparkSession, paths: Seq[String]): DataFrame = {
+    require(paths.nonEmpty, "readMerged needs at least one path")
+    normalize(readArticles(spark, paths: _*))
+  }
 }

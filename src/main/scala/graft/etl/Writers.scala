@@ -95,12 +95,6 @@ object Writers {
       StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
   }
 
-  /** The 100 TB layout: fact partitioned by the analysis axes. */
-  def writeFactPartitioned(articles: DataFrame, path: String): Unit =
-    articles.write.mode("overwrite")
-      .partitionBy("TopicID")
-      .parquet(path)
-
   /** Best-effort recursive delete for the temp dirs queries/tests
     * stage scratch data in — keeps repeated Bench runs from
     * accumulating temp output. */

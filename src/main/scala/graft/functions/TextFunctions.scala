@@ -134,11 +134,4 @@ object TextFunctions {
     * punctuation/casing/whitespace noise. */
   def fingerprint(text: Column): Column =
     md5(regexp_replace(lower(text), "[^a-z0-9]", ""))
-
-  /** 60-bit polynomial-free SimHash: per word, a 60-bit hash from the
-    * md5 hex prefix; each bit contributes +1/-1 weighted by term count;
-    * sign of each bit-sum forms the signature. Identical algorithm is
-    * expressible in ANSI SQL (the oracle), so it is engine-exact. */
-  def wordHash60(word: Column): Column =
-    Md5Prefix.md5_prefix(word, 15)
 }
